@@ -6,7 +6,7 @@ Re-expresses the reference's fetch→name→dedup→publish→current loop
 Spark-native form, fixing its four recorded weaknesses (SURVEY §4.3):
 
 1. O(full-bucket) listing per file  → persisted inventory table,
-   scoped pushed-down scans (inventory.py)
+   probed through a driver-side index (inventory.py)
 2. dedup-scope prefix bug           → documented scoped semantics
 3. volatile in-memory watermark     → checkpointed watermark store
    (watermark.py)

@@ -123,7 +123,9 @@ def batch_ingest(
     if not items:
         return {"published": 0, "duplicates": 0, "failed": 0, "watermark": None}
     n = parallelism or spark.sparkContext.defaultParallelism
-    work = spark.createDataFrame(items, "seqnum long, url string").repartition(n)
+    work = spark.createDataFrame(
+        pd.DataFrame(items, columns=["seqnum", "url"]), "seqnum long, url string"
+    ).repartition(n)
     fetched = work.mapInPandas(
         _fetch_partition(spec, store_factory), schema=FETCH_SCHEMA
     ).cache()
@@ -138,7 +140,8 @@ def batch_ingest(
             .agg(F.min(F.struct("seqnum", "name", "url", "size")).alias("m"))
             .select("scope", "md5", "m.seqnum", "m.name", "m.size")
         )
-        # anti-join against the persisted inventory (scope+md5 pushdown)
+        # anti-join against the persisted inventory (declared-schema
+        # scan, scope+md5 columns only)
         inv = inventory.load(spark).select("scope", "md5")
         new_df = first_per_content.join(inv, ["scope", "md5"], "left_anti")
 

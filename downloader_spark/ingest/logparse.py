@@ -7,6 +7,10 @@ Comment lines drop out because the regex demands leading digits
 (routeviews.go:77); malformed seqnums are skipped and counted
 (routeviews.go:103-105).
 
+The log's lines become a one-column frame through Arrow (a pandas
+frame with a declared schema): a row list would be pickled row by
+row, and on a log of a few lines that fixed cost was the whole parse.
+
 The collected work list is O(new files) — a handful of rows per cycle
 by construction (the reference sees ~1/day/collector) — so driving
 the per-item fetch loop from the driver is not a scale concern; the
@@ -15,6 +19,8 @@ driver.
 """
 
 from __future__ import annotations
+
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,7 +31,7 @@ from downloader_spark.ingest.config import CREATION_LOG_REGEX
 def creation_log_df(spark: SparkSession, log_text: str) -> DataFrame:
     """Parse a creation log into (seqnum, ts, path)."""
     lines = spark.createDataFrame(
-        [(ln,) for ln in log_text.splitlines()], "value string"
+        pd.DataFrame({"value": log_text.splitlines()}, dtype=object), "value string"
     )
     parsed = lines.select(
         F.regexp_extract("value", CREATION_LOG_REGEX, 1).alias("seqnum_s"),

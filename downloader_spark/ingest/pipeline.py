@@ -8,8 +8,8 @@ under the retry ladder (common.go:147-160), with the four SURVEY
 - dedup BEFORE write (transactional publish; the reference writes
   then deletes duplicates, common.go:106-130 — its delete can fail
   and leave dups);
-- dedup state = persisted inventory table with scoped probes (no
-  full-bucket listings);
+- dedup state = persisted inventory table, probed through its
+  driver-side index (no full-bucket listings, no per-item scans);
 - watermark checkpointed, advanced per item only while the cycle is
   error-free (routeviews.go:60-62);
 - 'current' pointer updated only for genuinely new content

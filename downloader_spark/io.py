@@ -141,6 +141,16 @@ def load_orc(
     return reader.orc(path)
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop
+    FileSystem resolved from the path's OWN scheme (local path,
+    ``file://``, ``hdfs://``, ``s3a://``...), never ``os.path``, so
+    driver-side existence checks and listings work wherever the
+    executors' reads do.  JVM metadata calls only: no Spark job."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() use."""
     for name in TABLES:

@@ -2674,6 +2674,14 @@ def snappy_decode(data: bytes) -> bytes:
         shift += 7
         if shift > 35:
             raise ValueError("snappy preamble varint too long")
+    # the densest element is a 3-byte copy tag emitting 64 bytes, so no
+    # valid block expands its remaining input more than 64/3-fold: check
+    # the claimed length against that before sizing the buffer from it
+    if 3 * n > 64 * (n_in - pos):
+        raise ValueError(
+            f"snappy preamble claims {n} bytes, more than the maximum "
+            f"expansion of the {n_in - pos} input bytes left"
+        )
     out = bytearray(n)
     w = 0
     from_bytes = int.from_bytes

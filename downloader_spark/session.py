@@ -61,22 +61,16 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "67108864"),
         )
-        # Always use the sort shuffle writer (one spill file per map
-        # task) instead of the bypass-merge writer, which creates
-        # P_map x P_reduce tiny partition files and then concatenates
-        # them.  jstack sampling of the r17 bench (OPTIMIZATION_r17.md
-        # batch 4) showed DiskBlockObjectWriter.initialize +
-        # copyFileStreamNIO dominating runnable worker samples on the
-        # multi-exchange iterative keys; forcing the sort writer cut
-        # graph_pagerank ~20% and embed_ann_graph_recall ~10% in
-        # interleaved A/B/A/B with no consistent regression.  Scale
-        # posture: bypass only ever engages when reduce partitions
-        # <= 200, so on a production cluster (thousands of reduce
-        # partitions) this setting is inert; it matters exactly where
-        # the file-churn pathology lives (small-R shuffles).
+        # Spark's default bypass-merge threshold (200).  Round 17 shipped
+        # 0 (always the sort writer) on an 8-key warm-session A/B; the
+        # full-registry bench.py run with a cold JVM at local[32] then
+        # regressed 153/317 keys (sql_q6 5.3x, keys faster at 8 cores
+        # than at 32) and the round's geomean fell to 0.91 — VERDICT.md
+        # and PERF_r17.json.  The knob stays for A/B runs; a new value
+        # needs that full-registry run.
         .config(
             "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"),
+            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "200"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from downloader_spark.io import hadoop_fs
 from downloader_spark.operators.llm_dedup import (
     hashed_shingle_sets,
     minhash_band_rows,
@@ -72,13 +73,10 @@ def docs_stream(
 
 def _state_has_batches(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` exists and contains at least one
-    ``batch_id=`` partition subdirectory — probed through the Hadoop
-    FileSystem resolved from the path's OWN scheme (local path,
-    ``file://``, ``hdfs://``, ``s3a://``...), never ``os.path``, so
-    state discovery works wherever the executors' reads do."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    ``batch_id=`` partition subdirectory — probed through
+    :func:`~downloader_spark.io.hadoop_fs`, so state discovery works
+    wherever the executors' reads do."""
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath) or not fs.getFileStatus(hpath).isDirectory():
         return False
     return any(

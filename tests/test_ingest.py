@@ -10,8 +10,12 @@ restart durability.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import random
+import uuid
 
+import pyarrow.parquet as pq
 import pytest
 
 from downloader_spark.ingest import (
@@ -24,8 +28,11 @@ from downloader_spark.ingest import (
     routeviews_source,
     run_with_retry,
 )
+from downloader_spark.ingest.batch import batch_ingest
 from downloader_spark.ingest.fetcher import FakeFetcher, FetchError
+from downloader_spark.ingest.inventory import InventoryTable
 from downloader_spark.ingest.logparse import creation_log_df, gen_work_items
+from downloader_spark.ingest.store import LocalFSStore
 
 # A creation log in the reference's format (routeviews.go:25-31):
 # comment lines, then "<seqnum> <unix-ts> <relative-path>" rows.
@@ -364,3 +371,123 @@ def test_run_forever_cycles_with_jittered_sleep(spark, tmp_path, rv_spec):
     assert all(3300 <= s <= 3900 for s in inter_cycle)
     # watermark done after cycle 1; later cycles fetch only the log
     assert dl.watermarks.get(rv_spec.name) == 1102
+
+
+# ------------------------------------------- driver-side inventory index
+
+def _inv_row(name: str, md5: str, scope: str, seq: int) -> tuple:
+    return (name, md5, scope, "ds", 1, seq)
+
+
+def test_inventory_index_sees_another_instances_appends(spark, tmp_path):
+    path = str(tmp_path / "inventory")
+    a, b = InventoryTable(path), InventoryTable(path)
+    a.append(spark, [_inv_row("s/n1", "m1", "s/", 1)])
+    assert a.is_duplicate(spark, "s/", "m1")
+    assert not a.is_duplicate(spark, "s/", "m2")
+    assert b.next_seq(spark) == 2
+    b.append(spark, [_inv_row("s/n2", "m2", "s/", 2)])
+    # a's index was warm; b's part file is unseen, so a's refresh reads it
+    assert a.is_duplicate(spark, "s/", "m2")
+    assert a.next_seq(spark) == 3
+
+
+def test_inventory_index_rebuilds_when_part_file_removed(spark, tmp_path):
+    inv = InventoryTable(str(tmp_path / "inventory"))
+    inv.append(spark, [_inv_row("s/n1", "m1", "s/", 1)])
+    inv.append(spark, [_inv_row("s/n2", "m2", "s/", 2)])
+    assert inv.is_duplicate(spark, "s/", "m2") and inv.next_seq(spark) == 3
+    [second] = [
+        f for f in (tmp_path / "inventory").glob("part-*.parquet")
+        if pq.read_table(f).column("md5").to_pylist() == ["m2"]
+    ]
+    second.unlink()
+    assert not inv.is_duplicate(spark, "s/", "m2")
+    assert inv.is_duplicate(spark, "s/", "m1")
+    assert inv.next_seq(spark) == 2
+
+
+def test_same_md5_under_another_scope_is_not_duplicate(spark, tmp_path):
+    inv = InventoryTable(str(tmp_path / "inventory"))
+    inv.append(spark, [_inv_row("a/x", "m1", "a/", 1)])
+    assert inv.is_duplicate(spark, "a/", "m1")
+    assert not inv.is_duplicate(spark, "b/", "m1")
+
+
+def _file_items(tmp_path) -> list[tuple[int, str]]:
+    """file:// work items serving the fixture payloads under the same
+    YYYY/MM/ paths as the fake log, so both ingest paths produce the
+    same object names."""
+    items = []
+    for url, data in _responses().items():
+        if url == LOG_URL:
+            continue
+        f = tmp_path / "remote" / url[len(_url("")):]
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(data)
+        items.append((int(data.decode().rsplit("-", 1)[1]), f"file://{f}"))
+    return sorted(items)
+
+
+def _batch(spark, tmp_path, spec, items) -> dict:
+    root = str(tmp_path / "archive")
+    return batch_ingest(
+        spark, spec, items, LocalFSStore(root),
+        functools.partial(LocalFSStore, root),
+        InventoryTable(str(tmp_path / "state" / "inventory")),
+    )
+
+
+def test_batch_ingest_then_downloader_dedups(spark, tmp_path, rv_spec):
+    summary = _batch(spark, tmp_path, rv_spec, _file_items(tmp_path)[:2])
+    assert summary["published"] == 2
+    dl = _mk_downloader(spark, tmp_path, FakeFetcher(_responses()),
+                        LocalFSStore(str(tmp_path / "archive")))
+    assert dl.ingest_incremental(rv_spec) == ["duplicate", "duplicate", "published"]
+    seqs = sorted(r.ingest_seq for r in dl.inventory.load(spark).collect())
+    assert seqs == [1, 2, 3]
+
+
+def test_downloader_then_batch_ingest_dedups(spark, tmp_path, rv_spec):
+    responses = _responses()
+    responses[LOG_URL] = "".join(LOG_FIXTURE.splitlines(True)[:-1]).encode()
+    dl = _mk_downloader(spark, tmp_path, FakeFetcher(responses),
+                        LocalFSStore(str(tmp_path / "archive")))
+    assert dl.ingest_incremental(rv_spec) == ["published", "published"]
+    summary = _batch(spark, tmp_path, rv_spec, _file_items(tmp_path))
+    assert summary["published"] == 1 and summary["duplicates"] == 2
+    # the downloader's warm index picks up the batch's part file
+    name = rv_spec.object_name(_url("2023/11/routeviews-rv2-20231116-1200.pfx2as.gz"))
+    digest = hashlib.md5(b"payload-1102").hexdigest()
+    assert dl.inventory.is_duplicate(spark, rv_spec.dedup_scope(name), digest)
+    assert dl.inventory.next_seq(spark) == 4
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted by the status tracker under a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_budget_duplicate_probe_and_publish(spark, tmp_path):
+    """A duplicate verdict on a warm index starts no Spark job and a
+    publish starts exactly one (the inventory append write)."""
+    spec = maxmind_sources("2023/11/16/", "20231116T120000Z-")[0]
+    fetcher = FakeFetcher({spec.url: b"geolite-v1"})
+    dl = _mk_downloader(spark, tmp_path, fetcher)
+    assert dl.ingest_snapshot(spec) == "published"
+    outcome: list[str] = []
+    assert _jobs_started(spark, lambda: outcome.append(dl.ingest_snapshot(spec))) == 0
+    fetcher.responses[spec.url] = b"geolite-v2"
+    assert _jobs_started(spark, lambda: outcome.append(dl.ingest_snapshot(spec))) == 1
+    assert outcome == ["duplicate", "published"]
+    assert dl.inventory.load(spark).count() == 2

@@ -1815,6 +1815,29 @@ def test_snappy_decode_rejects_malformed():
             snappy_decode(bad)
 
 
+def test_snappy_decode_rejects_oversized_preamble_before_allocating():
+    """A 6-byte corrupt block whose preamble claims 1 GiB fails with
+    ValueError before the output buffer is sized from the claim."""
+    import tracemalloc
+
+    import pytest
+
+    from downloader_spark.media import snappy_decode
+
+    blk = bytes([0x80, 0x80, 0x80, 0x80, 0x04, 0x00])  # varint 1 << 30
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="maximum expansion"):
+            snappy_decode(blk)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+    # the densest element (3-byte copy tag, 64 bytes out) still decodes
+    blk = bytes([65, 0]) + b"a" + bytes([(63 << 2) | 2, 1, 0])
+    assert snappy_decode(blk) == b"a" * 65
+
+
 def test_snappy_decode_matches_pyarrow_compressor():
     """Differential against pyarrow's real snappy compressor on
     structured and random payloads."""
